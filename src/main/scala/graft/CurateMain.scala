@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.{CurateOps, TextOps}
+import graft.pipeline.Sink
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -32,8 +34,6 @@ import org.apache.spark.sql.functions._
   * Emits ONE JSON metrics line with per-stage survivor counts.
   */
 object CurateMain {
-  private val CommitMarker = "_COMMITTED"
-
   final case class Stats(docsIn: Long, afterCap: Long, afterMix: Long,
                          afterBudget: Long, tokensKept: Long, skipped: Boolean)
 
@@ -70,10 +70,9 @@ object CurateMain {
       s"--mix-alpha must be in [0,1], got $al"))
     val partitions = a.get("partitions").map(_.toInt).getOrElse(0)
 
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(s"$out/$CommitMarker")
-    if (fs.exists(marker)) {
+    val outPath = new Path(out)
+    val fs = Sink.fs(spark, outPath)
+    if (Sink.committed(fs, outPath)) {
       val prior = spark.read.parquet(out)
       return Stats(-1L, -1L, -1L, prior.count(), -1L, skipped = true)
     }
@@ -122,8 +121,8 @@ object CurateMain {
         (mixed.join(sel.select(idCol), idCol), toks)
       }
 
-    selected.write.mode("overwrite").parquet(out)
-    fs.create(marker, true).close()
+    selected.write.mode("overwrite").options(Sink.writeOptions(spark, out)).parquet(out)
+    Sink.mark(fs, outPath)
     val afterBudget = spark.read.parquet(out).count()
     Stats(docsIn, afterCap, afterMix, afterBudget, tokensKept, skipped = false)
   }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.DedupOps
+import graft.pipeline.Sink
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -26,8 +28,6 @@ import org.apache.spark.sql.functions._
   * Emits ONE JSON metrics line: docs in, survivors, dropped, wall sec.
   */
 object DedupMain {
-  private val CommitMarker = "_COMMITTED"
-
   final case class Stats(docsIn: Long, survivors: Long, dropped: Long,
                          skipped: Boolean)
 
@@ -65,10 +65,9 @@ object DedupMain {
       case other => sys.error(s"--keep-by must be min-id, longest, or col:<name>, got '$other'")
     }
 
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(s"$out/$CommitMarker")
-    if (fs.exists(marker)) {
+    val outPath = new Path(out)
+    val fs = Sink.fs(spark, outPath)
+    if (Sink.committed(fs, outPath)) {
       // a completed run: re-launching is a reporting no-op, never a rewrite
       val prior = spark.read.parquet(out)
       val survivors = prior.count()
@@ -86,8 +85,8 @@ object DedupMain {
       checkpointDir = a.get("checkpoint-dir"),
       keepBy = keepBy,
       artifactDir = a.get("artifact-dir"))
-    survivors.write.mode("overwrite").parquet(out)
-    fs.create(marker, true).close()
+    survivors.write.mode("overwrite").options(Sink.writeOptions(spark, out)).parquet(out)
+    Sink.mark(fs, outPath)
     val nOut = spark.read.parquet(out).count() // count what was WRITTEN
     Stats(docsIn, nOut, docsIn - nOut, skipped = false)
   }

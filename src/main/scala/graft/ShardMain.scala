@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.{ShuffleOps, TextOps}
+import graft.pipeline.Sink
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -29,8 +31,6 @@ import org.apache.spark.sql.functions._
   * Emits ONE JSON metrics line: docs in/kept, shards, wall sec.
   */
 object ShardMain {
-  private val CommitMarker = "_COMMITTED"
-
   final case class Stats(docsIn: Long, docsKept: Long, shards: Int,
                          skipped: Boolean)
 
@@ -62,10 +62,9 @@ object ShardMain {
     require(sampleMille >= 0 && sampleMille <= 1000,
       s"--sample-mille must be in [0, 1000], got $sampleMille")
 
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(s"$out/$CommitMarker")
-    if (fs.exists(marker)) {
+    val outPath = new Path(out)
+    val fs = Sink.fs(spark, outPath)
+    if (Sink.committed(fs, outPath)) {
       val prior = spark.read.parquet(out)
       return Stats(docsIn = -1L, docsKept = prior.count(),
         shards = prior.select("shard").distinct().count().toInt, skipped = true)
@@ -94,12 +93,13 @@ object ShardMain {
       // (only _SUCCESS), the marker would commit, and every relaunch would
       // die in schema inference. Write the empty frame UNpartitioned —
       // parquet keeps the schema, reads back as 0 rows — and report it.
-      sharded.write.mode("overwrite").parquet(out)
-      fs.create(marker, true).close()
+      sharded.write.mode("overwrite").options(Sink.writeOptions(spark, out)).parquet(out)
+      Sink.mark(fs, outPath)
       return Stats(docsIn, 0L, 0, skipped = false)
     }
-    sharded.write.mode("overwrite").partitionBy("shard").parquet(out)
-    fs.create(marker, true).close()
+    sharded.write.mode("overwrite").options(Sink.writeOptions(spark, out))
+      .partitionBy("shard").parquet(out)
+    Sink.mark(fs, outPath)
     val written = spark.read.parquet(out)
     Stats(docsIn, written.count(),
       written.select("shard").distinct().count().toInt, skipped = false)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.pipeline.Sink
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,11 +27,14 @@ import org.apache.spark.storage.StorageLevel
   *    reported through an accumulator — capped coverage is never silent.
   */
 object DedupOps {
-  /** Stage commit marker for [[dedupCorpus]]'s `artifactDir` resume: a
-    * stage directory without it is a partial write (same contract as
-    * ExtractJob's bucket markers — existence alone is never completion).
-    */
-  private val CommitMarker = "_COMMITTED"
+  /** tinyint, smallint, int or bigint: the column types a long cast keeps exact. */
+  private def integralId(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+  }
 
   /** Rank duplicates within exact-fingerprint groups; `dup_rank = 1` is the
     * canonical survivor, everything else is droppable. This (id → rep)
@@ -692,9 +696,9 @@ object DedupOps {
       case None => freshLabels()
       case Some(dir) =>
         import org.apache.hadoop.fs.Path
-        val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def committed(stage: String) = fs.exists(new Path(s"$dir/$stage/$CommitMarker"))
-        def mark(stage: String) = fs.create(new Path(s"$dir/$stage/$CommitMarker"), true).close()
+        val fs = Sink.fs(spark, new Path(dir))
+        def committed(stage: String) = Sink.committed(fs, new Path(s"$dir/$stage"))
+        def mark(stage: String) = Sink.mark(fs, new Path(s"$dir/$stage"))
         // Parameter sidecar: committed stages embody the parameters they
         // were produced with — resuming them under DIFFERENT dedup
         // parameters would silently return stale results (the worst
@@ -724,7 +728,8 @@ object DedupOps {
           if (!committed("pairs")) {
             val pairs = minhashNearDups(df, idCol, textCol, threshold, k,
               numHashes, bands, maxBucket)
-            pairs.select("id_a", "id_b").write.mode("overwrite").parquet(s"$dir/pairs")
+            pairs.select("id_a", "id_b").write.mode("overwrite")
+              .options(Sink.writeOptions(spark, dir)).parquet(s"$dir/pairs")
             mark("pairs")
             pairs.unpersist(blocking = false)
           }
@@ -732,7 +737,8 @@ object DedupOps {
           val cc0 = connectedComponentsStatus(
             spark.read.parquet(s"$dir/pairs"), maxIter, checkpointDir)
           requireConverged(cc0) // deletes the stranded cc files on throw
-          cc0.labels.write.mode("overwrite").parquet(s"$dir/labels")
+          cc0.labels.write.mode("overwrite").options(Sink.writeOptions(spark, dir))
+            .parquet(s"$dir/labels")
           mark("labels")
           // the labels are durable parquet now — the round checkpoint (if
           // reliable) has nothing left to back
@@ -751,10 +757,11 @@ object DedupOps {
       case Some(keyCol) =>
         val members = cc.labels
           .join(df.select(col(idCol).as("id"), keyCol.as("__kv")), "id")
-        val idIsNum = df.schema(idCol).dataType
-          .isInstanceOf[org.apache.spark.sql.types.NumericType]
+        // only integral ids negate exactly through the long cast below: a
+        // fractional or decimal id would yield a keeper matching no member
+        // and drop its whole cluster, so those take the generic fallback
         val keepers =
-          if (idIsNum)
+          if (integralId(df.schema(idCol).dataType))
             // single-aggregate argmax (one exchange, no join back):
             // lexicographic max of (key, -id) picks the max key with ties
             // broken by MIN id. A cluster whose key is null for EVERY
@@ -1218,8 +1225,7 @@ object DedupOps {
     // candidate, and the operator would return an EMPTY pair set — a
     // silent wrong answer (ADVICE r5)
     Seq(idCol, sigCol).foreach { c =>
-      require(Seq("byte", "short", "int", "bigint")
-          .contains(sigs.schema(c).dataType.simpleString),
+      require(integralId(sigs.schema(c).dataType),
         s"hammingNearDups needs integral '$c'; got " +
           sigs.schema(c).dataType.simpleString)
     }
@@ -1397,7 +1403,7 @@ object DedupOps {
   private val IdxBanded = "banded"
   private def idxFs(spark: org.apache.spark.sql.SparkSession, dir: String) = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    (Sink.fs(spark, p), p)
   }
 
   // The commit protocol, in ONE place for both index families (MinHash
@@ -1415,15 +1421,15 @@ object DedupOps {
     require(labels.nonEmpty, s"no committed batches in index $dir")
     labels
   }
-  /** Validate a fresh batch label; returns the marker path to create once
-    * the batch directory is fully written.
+  /** Validate a fresh batch label; returns the marker name to create under
+    * the index root once the batch directory is fully written.
     */
   private def freshMarker(fs: org.apache.hadoop.fs.FileSystem,
                           root: org.apache.hadoop.fs.Path, label: String,
-                          dir: String): org.apache.hadoop.fs.Path = {
+                          dir: String): String = {
     require(label.matches("[A-Za-z0-9._-]+"), s"unsafe batch label: '$label'")
-    val marker = new org.apache.hadoop.fs.Path(root, CommittedPrefix + label)
-    require(!fs.exists(marker), s"batch '$label' is already committed in $dir")
+    val marker = CommittedPrefix + label
+    require(!Sink.committed(fs, root, marker), s"batch '$label' is already committed in $dir")
     marker
   }
   private def writeIndexParams(spark: org.apache.spark.sql.SparkSession,
@@ -1471,8 +1477,9 @@ object DedupOps {
     val marker = freshMarker(fs, root, label, dir)
     val (k, numHashes, bands) = readMinhashIndexParams(spark, dir)
     bandedRows(df, idCol, textCol, k, numHashes, bands)
-      .write.mode("overwrite").parquet(s"$dir/$IdxBanded/batch=$label")
-    fs.create(marker, true).close()
+      .write.mode("overwrite").options(Sink.writeOptions(spark, dir))
+      .parquet(s"$dir/$IdxBanded/batch=$label")
+    Sink.mark(fs, root, marker)
   }
 
   def readMinhashIndexParams(spark: org.apache.spark.sql.SparkSession,
@@ -1615,8 +1622,9 @@ object DedupOps {
     val marker = freshMarker(fs, root, label, destDir)
     writeIndexParams(spark, destDir, k, numHashes, bands)
     committedBanded(spark, srcDir)
-      .write.mode("overwrite").parquet(s"$destDir/$IdxBanded/batch=$label")
-    fs.create(marker, true).close()
+      .write.mode("overwrite").options(Sink.writeOptions(spark, destDir))
+      .parquet(s"$destDir/$IdxBanded/batch=$label")
+    Sink.mark(fs, root, marker)
   }
 
   // ---- incremental EXACT dedup: fingerprint index ------------------------
@@ -1649,8 +1657,9 @@ object DedupOps {
     val (fs, root) = idxFs(df.sparkSession, dir)
     val marker = freshMarker(fs, root, label, dir)
     fpRows(df, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$dir/$IdxFp/batch=$label")
-    fs.create(marker, true).close()
+      .write.mode("overwrite").options(Sink.writeOptions(df.sparkSession, dir))
+      .parquet(s"$dir/$IdxFp/batch=$label")
+    Sink.mark(fs, root, marker)
   }
 
   /** The rows of `batch` whose text was never seen — not in any committed

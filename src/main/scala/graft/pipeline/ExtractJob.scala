@@ -145,28 +145,21 @@ object ExtractJob {
     }
   }
 
-  /** Per-bucket commit marker: written into `bucket=N/` only after the job
-    * that produced the bucket completed successfully. A `bucket=N` directory
-    * WITHOUT the marker is a partial write (crash between task commits,
-    * speculative leftovers, FileOutputCommitter v2 partials) and must be
-    * repaired, never trusted — directory existence alone is not completion.
+  /** `bucket=N` directories under `path`, by bucket number. Each carries
+    * its own commit marker ([[Sink.committed]]); an unmarked one is
+    * repaired, never trusted.
     */
-  private val CommitMarker = "_COMMITTED"
-
-  private def bucketDirs(fs: org.apache.hadoop.fs.FileSystem, path: Path): Seq[Path] =
-    if (!fs.exists(path)) Seq.empty
+  private def bucketDirs(fs: org.apache.hadoop.fs.FileSystem, path: Path): Map[Int, Path] =
+    if (!fs.exists(path)) Map.empty
     else fs.listStatus(path).iterator
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map(_.getPath).toSeq
+      .map(s => s.getPath.getName.stripPrefix("bucket=").toInt -> s.getPath).toMap
 
   /** List COMMITTED output buckets (`bucket=N` dirs carrying the marker). */
   def completedBuckets(spark: SparkSession, outDir: String): Set[Int] = {
     val path = new Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    bucketDirs(fs, path)
-      .filter(p => fs.exists(new Path(p, CommitMarker)))
-      .map(_.getName.stripPrefix("bucket=").toInt)
-      .toSet
+    val fs = Sink.fs(spark, path)
+    bucketDirs(fs, path).filter { case (_, d) => Sink.committed(fs, d) }.keySet
   }
 
   /** Resumable run: hash-bucket by conversation, skip buckets whose commit
@@ -247,20 +240,20 @@ object ExtractJob {
 
   /** Shared resumable-bucket machinery: list committed buckets, repair
     * unmarked partials, run `stage` over the pending turns only, write
-    * partitioned by bucket, mark new buckets committed.
+    * partitioned by bucket, mark new buckets committed. The output tree is
+    * listed once before the write and once after it.
     */
   private def resumable(spark: SparkSession, turns: Dataset[Turn], outDir: String,
                         buckets: Int)(stage: Dataset[Turn] => org.apache.spark.sql.DataFrame): Set[Int] = {
     import spark.implicits._
     val path = new Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = completedBuckets(spark, outDir)
+    val fs = Sink.fs(spark, path)
+    val (marked, partial) = bucketDirs(fs, path).partition { case (_, d) => Sink.committed(fs, d) }
+    val done = marked.keySet
 
     // repair: an unmarked bucket dir is a partial write — remove it so the
     // re-run regenerates it instead of silently skipping half a bucket
-    bucketDirs(fs, path)
-      .filter(p => !fs.exists(new Path(p, CommitMarker)))
-      .foreach(p => fs.delete(p, true))
+    partial.values.foreach(d => fs.delete(d, true))
 
     val withBucket = turns.withColumn("bucket", pmod(hash(col("conv_id")), lit(buckets)))
     val remaining = if (done.isEmpty) withBucket
@@ -270,12 +263,13 @@ object ExtractJob {
     val out = stage(pending)
       .withColumn("bucket", pmod(hash(col("conv_id")), lit(buckets)))
 
-    out.write.mode(SaveMode.Append).partitionBy("bucket").parquet(outDir)
+    out.write.mode(SaveMode.Append).options(Sink.writeOptions(spark, outDir))
+      .partitionBy("bucket").parquet(outDir)
 
-    // the write job succeeded: commit every bucket dir it produced
-    bucketDirs(fs, path)
-      .filter(p => !fs.exists(new Path(p, CommitMarker)))
-      .foreach(p => fs.create(new Path(p, CommitMarker), true).close())
-    completedBuckets(spark, outDir)
+    // the write job succeeded: commit every bucket dir it produced (the
+    // committed ones were filtered out of its input, so it left them as is)
+    val written = bucketDirs(fs, path)
+    written.foreach { case (b, d) => if (!done(b)) Sink.mark(fs, d) }
+    written.keySet
   }
 }

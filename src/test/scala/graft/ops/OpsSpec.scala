@@ -196,6 +196,39 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(survivors == Set("a1", "b2", "c1", "d5"), survivors.toString)
   }
 
+  test("dedupCorpus keepBy: fractional ids take the generic path, no cluster is dropped") {
+    // a long-cast argmax would name keeper 1 (or 2) for {1.5, 2.5}, match
+    // no member and drop the whole cluster; {7.25} is untouched
+    val df = spark.createDataFrame(Seq(
+      (1.5, "aa bb cc dd ee", 3L),
+      (2.5, "aa bb cc dd ee", 7L),
+      (7.25, "zz unrelated doc here", 1L)))
+      .toDF("doc_id", "text", "score")
+    val survivors = DedupOps.dedupCorpus(df, "doc_id", "text", threshold = 0.8,
+        keepBy = Some(col("score")))
+      .select("doc_id").collect().map(_.getDouble(0)).toSet
+    assert(survivors == Set(2.5, 7.25), survivors.toString)
+  }
+
+  test("hammingNearDups: tinyint and smallint ids are accepted, string ids rejected") {
+    val base = spark.createDataFrame(Seq((1, 0x0F0FL), (2, 0x0F0EL), (3, -1L)))
+      .toDF("id", "sig")
+    for (t <- Seq("tinyint", "smallint")) {
+      val sigs = base.select(col("id").cast(t).as("id"), col("sig"))
+      val pairs = DedupOps.hammingNearDups(sigs, "id", "sig")
+      try {
+        val got = pairs.collect().map(r => (r.getAs[Number]("id_a").longValue,
+          r.getAs[Number]("id_b").longValue)).toSet
+        assert(got == Set((1L, 2L)), s"$t: $got")
+      } finally pairs.unpersist(blocking = false)
+    }
+    val ex = intercept[IllegalArgumentException] {
+      DedupOps.hammingNearDups(base.select(col("id").cast("string").as("id"), col("sig")),
+        "id", "sig")
+    }
+    assert(ex.getMessage.contains("needs integral 'id'"), ex.getMessage)
+  }
+
   test("dedupCorpus artifactDir: stages commit, resume consumes them, partials are repaired") {
     import java.nio.file.{Files, Paths}
     val dir = Files.createTempDirectory("graft_dc_art").toString
