@@ -88,19 +88,6 @@ object Bench {
         f"WARN bench regression gate: $q took $t%.2f s > $factor%.1fx recorded ${recorded(q)}%.2f s — re-bench or fix before shipping"
     }
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
-
   /** Time the extraction of `n` generated turns: one full-size warmup run
     * (JIT + heap shaping), then best of two timed runs. Returns
     * (seconds, turns/s).
@@ -148,7 +135,7 @@ object Bench {
     val restoreSpec = "0-" + (Runtime.getRuntime.availableProcessors() - 1)
     if (!setAffinity("0-15")) return (Double.NaN, Double.NaN, Double.NaN)
     try {
-      val s = session(16)
+      val s = Launcher.local(16)
       try {
         def once(): Double = {
           val t0 = System.nanoTime()
@@ -216,11 +203,11 @@ object Bench {
     var lowSec = Double.MaxValue
     var midSec = Double.MaxValue
     for (round <- 1 to 3) {
-      val sLow = session(scaleN)
+      val sLow = Launcher.local(scaleN)
       val (ls, _) = timeExtract(sLow, scaleTurns, parts, warm = round == 1)
       sLow.stop()
       lowSec = math.min(lowSec, ls)
-      val s4n = session(scaleN * 4)
+      val s4n = Launcher.local(scaleN * 4)
       val (ms, _) = timeExtract(s4n, scaleTurns, parts, warm = round == 1)
       s4n.stop()
       midSec = math.min(midSec, ms)
@@ -235,7 +222,7 @@ object Bench {
     val (p16Sec, p16Tput, p16Spread) =
       if (cpus >= 16) pinned16(benchTurns, parts) else (Double.NaN, Double.NaN, Double.NaN)
 
-    val sHigh = session(cpus)
+    val sHigh = Launcher.local(cpus)
     val (highSec, highTput) = timeExtract(sHigh, benchTurns, parts)
     // full-ladder transparency: the N*4 -> cpus job efficiency AND the
     // machine's own pure-CPU ceiling over the same pair (run after the

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{ExtractJob, SpanLineage}
+import graft.pipeline.{ExtractJob, Sink, SpanLineage}
 import graft.sources.TranscriptSource
 import org.apache.spark.sql.SparkSession
 
@@ -24,21 +24,25 @@ import org.apache.spark.sql.SparkSession
   * partial failure completes exactly the missing buckets), optional
   * per-partition lineage table and span-lineage table, and one final JSON
   * metrics line on stdout (rows, parse errors, wall seconds, turns/sec,
-  * completed buckets). Master/executors come from spark-submit — the job
-  * itself sets only job-shape configuration.
+  * completed buckets, output dir). Master/executors come from spark-submit
+  * — the job itself sets only job-shape configuration.
   */
 object ExtractMain {
-  private def parseArgs(args: Array[String]): Map[String, String] = {
-    require(args.length % 2 == 0,
-      s"arguments must be --flag value pairs, got: ${args.mkString(" ")}")
-    args.sliding(2, 2).map {
-      case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
-      case Array(k, v) => sys.error(s"expected a --flag, got '$k $v'")
-    }.toMap
-  }
+  /** `wallSec` covers the extract phase only: the optional lineage and
+    * span sinks are separate full passes.
+    */
+  final case class Stats(rows: Long, parseErrors: Long, wallSec: Double,
+                         completedBuckets: Set[Int], out: String)
 
-  def main(args: Array[String]): Unit = {
-    val a = parseArgs(args)
+  private val KnownFlags = Set("in", "out", "mode", "format", "markup", "buckets",
+    "date-from", "date-to", "lineage", "spans")
+
+  /** The launchable body, separated from `main` so tests drive it with
+    * their own session and tmp dirs. Every flag is validated before the
+    * input is read.
+    */
+  def run(spark: SparkSession, a: Map[String, String]): Stats = {
+    Launcher.checkFlags(a, KnownFlags)
     val in = a.getOrElse("in", sys.error("--in <path-or-table> is required"))
     val out = a.getOrElse("out", sys.error("--out <dir> is required"))
     val markup = a.getOrElse("markup", "bbcode").toLowerCase match {
@@ -47,24 +51,8 @@ object ExtractMain {
       case other    => sys.error(s"--markup must be bbcode or html, got '$other'")
     }
     val buckets = a.getOrElse("buckets", "256").toInt
-
-    val spark = SparkSession.builder()
-      .appName("graft-extract")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-
-    val turns = TranscriptSource.read(spark, TranscriptSource.Config(
-      format = a.getOrElse("format", "parquet"),
-      location = in,
-      dateFrom = a.get("date-from"),
-      dateTo = a.get("date-to")))
-
-    val metrics = ExtractJob.newMetrics(spark)
-    val t0 = System.nanoTime()
-    val done = a.getOrElse("mode", "extract").toLowerCase match {
-      case "extract" =>
-        ExtractJob.runResumable(spark, turns, out, buckets = buckets,
-          cfg = ExtractJob.defaultCfg(markup), metrics = Some(metrics), markup = markup)
+    val mainContent = a.getOrElse("mode", "extract").toLowerCase match {
+      case "extract" => false
       case "main-content" =>
         // the lineage/span sinks describe the strip/render pipeline, not
         // the main-content output — silently writing them here would emit
@@ -76,35 +64,43 @@ object ExtractMain {
         // --lineage/--spans instead of letting the user believe it applied
         require(a.get("markup").isEmpty,
           "--markup applies to --mode extract only (main-content is HTML-only)")
-        ExtractJob.runResumableMainContent(spark, turns, out, buckets = buckets,
-          metrics = Some(metrics))
+        true
       case other => sys.error(s"--mode must be extract or main-content, got '$other'")
     }
 
-    // extraction throughput is measured over the extract phase only — the
-    // optional lineage/span sinks are separate full passes
-    val sec = (System.nanoTime() - t0) / 1e9
+    val turns = TranscriptSource.read(spark, TranscriptSource.Config(
+      format = a.getOrElse("format", "parquet"),
+      location = in,
+      dateFrom = a.get("date-from"),
+      dateTo = a.get("date-to")))
+
+    val metrics = ExtractJob.newMetrics(spark)
+    val (done, sec) = Launcher.timed {
+      if (mainContent)
+        ExtractJob.runResumableMainContent(spark, turns, out, buckets = buckets,
+          metrics = Some(metrics))
+      else
+        ExtractJob.runResumable(spark, turns, out, buckets = buckets,
+          cfg = ExtractJob.defaultCfg(markup), metrics = Some(metrics), markup = markup)
+    }
 
     a.get("lineage").foreach { dir =>
-      ExtractJob.lineage(turns, markup = markup).write.mode("overwrite").parquet(dir)
+      ExtractJob.lineage(turns, markup = markup)
+        .write.mode("overwrite").options(Sink.writeOptions(spark, dir)).parquet(dir)
     }
     a.get("spans").foreach { dir =>
       SpanLineage.spanTable(turns, markup = markup)
-        .write.mode("overwrite").parquet(dir)
+        .write.mode("overwrite").options(Sink.writeOptions(spark, dir)).parquet(dir)
     }
-    val rows = metrics.rows.value
-    def f(d: Double): String = BigDecimal(d).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    // JSON-escape the user-supplied path (quotes/backslashes/control chars
-    // would otherwise produce an unparseable metrics line)
-    val outJson = out.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    println(s"""{"rows":$rows,"parse_errors":${metrics.errors.value},""" +
-      s""""wall_sec":${f(sec)},"turns_per_sec":${f(if (sec > 0) rows / sec else 0)},""" +
-      s""""completed_buckets":${done.size},"out":"$outJson"}""")
-    spark.stop()
+    Stats(metrics.rows.value, metrics.errors.value, sec, done, out)
   }
+
+  /** The metrics line's fields. */
+  def report(s: Stats): Seq[(String, Any)] =
+    Seq("rows" -> s.rows, "parse_errors" -> s.parseErrors, "wall_sec" -> s.wallSec,
+      "turns_per_sec" -> (if (s.wallSec > 0) s.rows / s.wallSec else 0.0),
+      "completed_buckets" -> s.completedBuckets.size, "out" -> s.out)
+
+  def main(args: Array[String]): Unit =
+    Launcher.submit("graft-extract", args)((spark, a) => report(run(spark, a)))
 }

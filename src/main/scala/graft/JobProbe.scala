@@ -1,30 +1,29 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
-/** Dev utility (NOT part of the driver contract): run one SparkEntry query
-  * (optionally twice — the second run is JIT-warm) and print every Spark
-  * job's wall-clock plus the driver-side gap before it, attributed to the
-  * action's call site. This localizes where a multi-action operator (e.g.
-  * minhashNearDups's persist/count ladder) actually spends its time —
-  * task time vs. driver planning time per job.
+/** Dev utility (NOT part of the driver contract), the one probe main: run
+  * the named SparkEntry queries (each `SPARK_GRAFT_PROBE_RUNS` times, 2 by
+  * default — the second run is JIT-warm) and print each run's total
+  * seconds, then every Spark job's wall-clock plus the driver-side gap
+  * before it, attributed to the action's call site. This localizes where a
+  * multi-action operator (e.g. minhashNearDups's persist/count ladder, or
+  * the filter/dedup/decontaminate stages of `q_pretrain_e2e`) actually
+  * spends its time — task time vs. driver planning time per job. Layer
+  * timings of the extract and dedup launch paths come from
+  * `perfbench/run.py --trace 1`.
+  *
+  * {{{
+  * SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain graft.JobProbe q_pretrain_e2e q_dedup_keepers"
+  * }}}
   */
 object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-job-probe")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = Launcher.local(32)
 
     final case class JobRec(id: Int, site: String, start: Long, var end: Long = 0L)
     val jobs = mutable.ArrayBuffer[JobRec]()

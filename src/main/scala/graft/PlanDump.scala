@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{DedupOps, JoinOps, SimOps}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: dump the physical plans of the headline operators to
@@ -10,14 +9,8 @@ import org.apache.spark.sql.functions._
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plan-dump")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = Launcher.local(8)
+    spark.conf.set("spark.sql.shuffle.partitions", 32L)
 
     def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       println(s"===== $name =====")

@@ -34,25 +34,11 @@ object ShardMain {
   final case class Stats(docsIn: Long, docsKept: Long, shards: Int,
                          skipped: Boolean)
 
-  private def parseArgs(args: Array[String]): Map[String, String] = {
-    require(args.length % 2 == 0,
-      s"arguments must be --flag value pairs, got: ${args.mkString(" ")}")
-    args.sliding(2, 2).map {
-      case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
-      case Array(k, v) => sys.error(s"expected a --flag, got '$k $v'")
-    }.toMap
-  }
-
   private val KnownFlags = Set("in", "out", "id-col", "seed", "shards",
     "partitions", "sample-mille", "sample-col")
 
   def run(spark: SparkSession, a: Map[String, String]): Stats = {
-    // fail fast on unknown flags — a typo'd --shard must not silently
-    // launch a 100 TB shuffle with the default shard count
-    val unknown = a.keySet -- KnownFlags
-    require(unknown.isEmpty,
-      s"unknown flag(s): ${unknown.toSeq.sorted.map("--" + _).mkString(", ")}; " +
-        s"known: ${KnownFlags.toSeq.sorted.map("--" + _).mkString(", ")}")
+    Launcher.checkFlags(a, KnownFlags)
     val in = a.getOrElse("in", sys.error("--in <documents parquet> is required"))
     val out = a.getOrElse("out", sys.error("--out <dir> is required"))
     val idCol = a.getOrElse("id-col", "doc_id")
@@ -105,18 +91,13 @@ object ShardMain {
       written.select("shard").distinct().count().toInt, skipped = false)
   }
 
-  def main(args: Array[String]): Unit = {
-    val a = parseArgs(args)
-    val spark = SparkSession.builder()
-      .appName("graft-shard")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    val t0 = System.nanoTime()
-    val s = run(spark, a)
-    val sec = (System.nanoTime() - t0) / 1e9
-    def f(d: Double): String = BigDecimal(d).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    println(s"""{"docs_in":${s.docsIn},"docs_kept":${s.docsKept},""" +
-      s""""shards":${s.shards},"skipped":${s.skipped},"wall_sec":${f(sec)}}""")
-    spark.stop()
+  /** The metrics line's fields for a run that took `sec` seconds. */
+  def report(s: Stats, sec: Double): Seq[(String, Any)] =
+    Seq("docs_in" -> s.docsIn, "docs_kept" -> s.docsKept, "shards" -> s.shards,
+      "skipped" -> s.skipped, "wall_sec" -> sec)
+
+  def main(args: Array[String]): Unit = Launcher.submit("graft-shard", args) { (spark, a) =>
+    val (s, sec) = Launcher.timed(run(spark, a))
+    report(s, sec)
   }
 }
